@@ -56,6 +56,68 @@ _OPERATOR_MODULES = (
 # The driver window size the rotation below is planned against.
 DRIVER_WINDOW = 50
 
+# Round-17 driver-window priority (generated by
+# `python scripts/plan_window.py --tuple` at HEAD; boundary 92216cbfe,
+# touched=16, fill=34). The touched head is every query backed by
+# api.knn_join, ManifestTable or MaterializedAgg; the fill continues the
+# oldest-driver-green rotation past the r16 window.
+_ROUND17_PRIORITY = (
+    # -- touched by the job-trimming pass (knn_join query collect and
+    # no-join rerank, route-before-read MV refresh, coalesced one-file
+    # lake stage) --
+    "sim_ann_recall_sweep",
+    "sim_knn_join",
+    "sim_knn_join_ann",
+    "stream_ann_ingest",
+    "stream_substring_dedup",
+    "stream_upsert_merge",
+    "maintenance_compact",
+    "lake_cdc_apply",
+    "lake_incremental_mv",
+    "lake_zorder_skip",
+    "lake_compact_small",
+    "stream_lake_mv",
+    "lake_merge_into",
+    "lake_constraints_restore",
+    "lake_update_delete",
+    "stream_lake_cdc",
+    # -- oldest-driver-green rotation fill --
+    "agg_approx_distinct",  # last green r10
+    "join_skew_salted",  # last green r10
+    "sql_q5_local_supplier_volume",  # last green r10
+    "fn_string",  # last green r10
+    "fn_date",  # last green r10
+    "fn_math",  # last green r10
+    "fn_array_explode",  # last green r10
+    "fn_map",  # last green r10
+    "fn_json",  # last green r10
+    "fn_bitwise",  # last green r10
+    "udf_scalar",  # last green r10
+    "udtf_grouped_map",  # last green r10
+    "udtf_map",  # last green r10
+    "text_token_stats",  # last green r10
+    "text_quality",  # last green r10
+    "text_lang_stats",  # last green r10
+    "mm_frame_sample",  # last green r10
+    "pipeline_corpus_preprocess",  # last green r10
+    "pipeline_sensory_ingest",  # last green r10
+    "nested_struct_stored",  # last green r10
+    "nested_map_stored",  # last green r10
+    "nested_null_stored",  # last green r10
+    "sketch_bloom",  # last green r11
+    "sql_exists_subquery",  # last green r11
+    "sql_scalar_subquery",  # last green r11
+    "union_distinct",  # last green r11
+    "intersect",  # last green r11
+    "intersect_all",  # last green r11
+    "except_distinct",  # last green r11
+    "except",  # last green r11
+    "except_all",  # last green r11
+    "fn_array",  # last green r11
+    "text_tokenize",  # last green r11
+    "mm_binary",  # last green r11
+)
+
 # Round-14 window (VERDICT r13 Next #1/#3 — register the multi-query ANN
 # recall sweep, drain the ENTIRE r6+r7 evidence tail). Composition, in
 # order (generated by `python scripts/plan_window.py --tuple` at HEAD;
@@ -945,7 +1007,7 @@ def all_queries() -> dict[str, QuerySpec]:
     """Import every operator module (side effect: registration) and return
     the full registry, reordered so the driver's 50-query correctness
     window covers refactor-touched and oldest-verified operators first
-    (see _ROUND16_PRIORITY; the earlier round tuples are the stable
+    (see _ROUND17_PRIORITY; the earlier round tuples are the stable
     tail). Keys are the SURVEY.md §2 operator IDs."""
     import importlib
 
@@ -953,6 +1015,7 @@ def all_queries() -> dict[str, QuerySpec]:
         importlib.import_module(mod)
     ordered: dict[str, QuerySpec] = {}
     for name in (
+        *_ROUND17_PRIORITY,
         *_ROUND16_PRIORITY,
         *_ROUND15_PRIORITY,
         *_ROUND14_PRIORITY,

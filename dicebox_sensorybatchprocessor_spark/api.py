@@ -2456,7 +2456,13 @@ def knn_join(
       ~partitions x |Q| x (k+3 + ties) pairs are re-scored with the JVM-fold
       expression (dot(raw,raw)/(|a|·|b|), the emb_label_margin form
       hash-proved cross-engine) — numpy only selects, every returned
-      value comes from the proven form. At 100 TB this is the
+      value comes from the proven form. Survivors leave the worker with
+      both raw vectors, so the rerank joins nothing back, and the
+      score is projected before the window's exchange, so no vector is
+      shuffled. Plan build runs two small jobs (the dimension via
+      take(1), then the query side collected once, capped at the budget
+      plus one row) and the Python fan-out follows the corpus bytes at
+      the session's advisory partition size. At 100 TB this is the
       broadcast-join regime: one corpus scan total, not one per query.
     * crossJoin fallback (query set beyond the budget): the exact
       JVM-fold score over queries x corpus with the same final window —
@@ -2486,29 +2492,35 @@ def knn_join(
         F.transform(vec_col, lambda x: x.cast("double")).alias("__sbp_v"),
     ).filter(nrm("__sbp_v") > 0.0)
 
-    n_q = q.count()
-    dim_row = q.select("__sbp_qraw").first()
-    if dim_row is None:
+    head = q.select("__sbp_qraw").take(1)
+    if not head:
         return spark.createDataFrame(
             [],
             f"{query_id_col} bigint, {id_col} bigint, cosine double, rank int",
         )
-    if n_q * len(dim_row[0]) * 8 <= _KNN_JOIN_BYTE_BUDGET:
-        rows = q.collect()
+    # n_q·dim·8 <= budget  <=>  n_q <= budget // (8·dim): collecting one
+    # row past the cap decides the route without a count() job, and the
+    # driver never holds more than budget + 1 row
+    max_rows = _KNN_JOIN_BYTE_BUDGET // (8 * len(head[0][0]))
+    rows = q.limit(max_rows + 1).collect()
+    if len(rows) <= max_rows:
         qids = np.array([r["__sbp_qid"] for r in rows], dtype="int64")
         qmat = np.stack([np.array(r["__sbp_qraw"]) for r in rows])
         qunit = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-        bc = spark.sparkContext.broadcast((qids, qunit, bool(exclude_self), k))
+        bc = spark.sparkContext.broadcast(
+            (qids, qmat, qunit, bool(exclude_self), k)
+        )
 
         def part_top(batches):
             import pandas as pd
 
-            b_qids, b_qunit, b_excl, b_k = bc.value
+            b_qids, b_qmat, b_qunit, b_excl, b_k = bc.value
             for batch in batches:
                 if batch.empty:
                     continue
                 vids = batch["__sbp_id"].to_numpy()
-                m = np.stack(batch["__sbp_v"].to_numpy()).astype("float64")
+                vecs = batch["__sbp_v"].to_numpy()
+                m = np.stack(vecs).astype("float64")
                 sims = (m / np.linalg.norm(m, axis=1, keepdims=True)) @ b_qunit.T
                 if b_excl:
                     sims[vids[:, None] == b_qids[None, :]] = -np.inf
@@ -2529,23 +2541,39 @@ def knn_join(
                 part = np.argpartition(-r, kk - 1, axis=0)[:kk, :]
                 thr = np.take_along_axis(r, part, axis=0).min(axis=0)
                 keep_rows, keep_cols = np.nonzero(r >= thr[None, :])
+                # survivors carry both raw vectors, so the JVM-fold
+                # rerank needs no join back to the corpus or the queries
                 yield pd.DataFrame(
                     {
                         "__sbp_qid": b_qids[keep_cols],
                         "__sbp_id": vids[keep_rows],
+                        "__sbp_qraw": list(b_qmat[keep_cols]),
+                        "__sbp_v": vecs[keep_rows],
                     }
                 )
 
-        n_c = c.count()
-        target = min(spark.sparkContext.defaultParallelism, max(1, n_c // 64))
+        # every Python task pays a fixed worker cost (NOTES.md), so the
+        # fan-out follows the corpus bytes at the session's advisory
+        # partition size rather than the core count
+        size = int(c._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        jutils = spark._jvm.org.apache.spark.network.util.JavaUtils
+        advisory = jutils.byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        )
+        target = min(
+            spark.sparkContext.defaultParallelism, max(1, -(-size // advisory))
+        )
         probe = c.repartition(target) if c.rdd.getNumPartitions() < target else c
-        cand = probe.mapInPandas(part_top, "__sbp_qid long, __sbp_id long")
+        scored = probe.mapInPandas(
+            part_top,
+            "__sbp_qid long, __sbp_id long, "
+            "__sbp_qraw array<double>, __sbp_v array<double>",
+        )
         if exclude_self:
             # the -inf mask keeps self out of selection, but a partition
             # narrower than the margin can still emit masked rows — and a
             # self pair re-scores to cosine 1.0 in the rerank
-            cand = cand.filter(F.col("__sbp_id") != F.col("__sbp_qid"))
-        scored = cand.join(c, "__sbp_id").join(F.broadcast(q), "__sbp_qid")
+            scored = scored.filter(F.col("__sbp_id") != F.col("__sbp_qid"))
     else:
         scored = c.crossJoin(q)
         if exclude_self:

@@ -62,9 +62,3 @@ def _repair_events(df: DataFrame) -> DataFrame:
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load(spark, sf_dir, name) for name in TABLES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture as a temp view for ``spark.sql`` callers."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

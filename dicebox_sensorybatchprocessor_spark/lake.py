@@ -719,10 +719,15 @@ class ManifestTable:
     def stage(self, df: DataFrame, n_files: int | None = None) -> list[str]:
         """Write ``df`` as immutable data files under a writer-unique
         subdir and return their root-relative paths. NOT visible to
-        readers until a commit names them."""
+        readers until a commit names them. ``n_files=1`` coalesces instead
+        of repartitioning: one file either way, without a shuffle job."""
         sub = os.path.join(_DATA_DIR, uuid.uuid4().hex)
         out = os.path.join(self.root, sub)
-        (df.repartition(n_files) if n_files else df).write.parquet(out)
+        if n_files == 1:
+            df = df.coalesce(1)
+        elif n_files:
+            df = df.repartition(n_files)
+        df.write.parquet(out)
         return sorted(
             os.path.join(sub, f)
             for f in os.listdir(out)

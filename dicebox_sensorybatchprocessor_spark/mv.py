@@ -59,12 +59,15 @@ def _route_refresh(
     it at BOTH scale ends (VERDICT r11 #4). Two regimes:
 
     - ``table_bytes ≤ small_table_bytes`` (default 64 MB): RECOMPUTE.
-      Here every cost is dominated by the fixed per-refresh bill (state
-      read + delta scan + merge join + min/max repair — several Spark
-      jobs) rather than bytes scanned; one GROUP BY over a ≤64 MB table
-      is a single cheap job and measured FASTER at sf0.1 (0.40 s vs
-      0.69 s incremental, BENCH r10/r11 — the inversion this regime
-      term closes).
+      Here every cost is dominated by the fixed per-refresh bill rather
+      than bytes scanned. An incremental refresh runs several Spark
+      jobs: a schema-inference job to read the state, then one staging
+      write whose plan scans the delta, merge-joins it into the state
+      and repairs min/max from the new snapshot. A recompute is one
+      GROUP BY over the snapshot, written by one staging job; the route
+      is picked before the state is read, so it reads no state at all.
+      It measured FASTER at sf0.1 (0.40 s vs 0.69 s incremental, BENCH
+      r10/r11 — the inversion this regime term closes).
     - above it: route on BYTES — incremental iff
       ``delta_bytes ≤ recompute_ratio × table_bytes``. Bytes, not file
       counts: a 2-of-16-FILE delta can still be half the table's bytes
@@ -289,9 +292,10 @@ class MaterializedAgg:
         ``mode='auto'`` (default) routes on :func:`_route_refresh`'s
         two-regime BYTES model (r12, VERDICT r11 #4): tables at or under
         ``small_table_bytes`` recompute outright — the fixed per-refresh
-        bill (state read + merge join + min/max repair, several jobs)
-        dominates there and made auto pick the measurably slower path at
-        sf0.1 in r10/r11 — while larger tables go incremental unless the
+        bill of the incremental route (state read + merge join + min/max
+        repair, several jobs) dominates there and made auto pick the
+        measurably slower path at sf0.1 in r10/r11; a recompute reads no
+        state — while larger tables go incremental unless the
         delta's BYTES exceed ``recompute_ratio ×`` the snapshot's (a
         compaction commit is the extreme case: plus+minus spans ~2× the
         table while recompute scans it once). Sizes come from one
@@ -340,13 +344,7 @@ class MaterializedAgg:
                     "noop": True,
                     "mode": "noop",
                 }
-            old_state = (
-                self.table.read(spark) if mv_snap["files"] else None
-            )
-            legacy_state = old_state is not None and any(
-                f"__c_{c}" not in old_state.columns for c in self._sum_cols
-            )
-            if mode == "auto" and not legacy_state:
+            if mode == "auto":
                 import os
 
                 try:
@@ -371,9 +369,18 @@ class MaterializedAgg:
                     )
             else:
                 routed = mode
-            recompute = (
-                routed == "recompute"
-                or legacy_state  # pre-counter state: one recompute migrates it
+            # the route is picked before the state is read: a recompute
+            # never looks at the old state, so it pays no read (and no
+            # schema-inference job) for it
+            old_state = (
+                self.table.read(spark)
+                if routed == "incremental" and mv_snap["files"]
+                else None
+            )
+            recompute = routed == "recompute" or (
+                # pre-counter state: one recompute migrates it
+                old_state is not None
+                and any(f"__c_{c}" not in old_state.columns for c in self._sum_cols)
             )
             if recompute:
                 merged = self._full_state(spark, v_to)

@@ -157,8 +157,9 @@ def _run_to_table(spark: SparkSession, df: DataFrame, name: str, mode: str) -> D
 # bench + pytest in one session) and ops sharing a layout (stream_dedup /
 # stream_dedup_wm both stage [raw, every-10th-redelivered]) pay the
 # parquet write exactly once. Only ops that never mutate the staged dir
-# may pass cache_key (stream_watermark renames a late file in, so it
-# stays uncached).
+# may pass cache_key; ops that do (stream_watermark links a late file in,
+# stream_join_outer appends an advancer) mutate a private hardlinked copy
+# of a cached stage instead (_stage_linked).
 _STAGE_CACHE: dict[tuple[str, str], str] = {}
 
 

@@ -123,6 +123,10 @@ def test_compact_preserves_rows_and_reduces_files(spark, tmp_path):
     assert t.read(spark).count() == 1000
     # old snapshot still time-travel readable until vacuumed
     assert t.read(spark, version=1).count() == 1000
+    # n_files=1 coalesces a many-partition frame into exactly one file
+    one = t.stage(df.repartition(8), n_files=1)
+    assert len(one) == 1
+    assert spark.read.parquet(os.path.join(t.root, one[0])).count() == 1000
 
 
 def test_remote_scheme_refused(tmp_path):

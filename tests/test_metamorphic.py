@@ -520,10 +520,12 @@ def test_ann_recall_sweep_measured(spark):
 
 
 def test_knn_join_routes_agree_and_match_knn_query(spark, monkeypatch):
-    """api.knn_join's broadcast-matrix route and its beyond-budget
-    crossJoin fallback must return identical rows (values included), and
-    each query's rows must equal api.knn_query's single-vector answer —
-    the batch op is exactly N single queries, computed in one pass."""
+    """api.knn_join's broadcast-matrix route (one Python task, and fanned
+    out over several when the advisory partition size is tiny) and its
+    beyond-budget crossJoin fallback must return identical rows (values
+    included), and each query's rows must equal api.knn_query's
+    single-vector answer — the batch op is exactly N single queries,
+    computed in one pass."""
     from dicebox_sensorybatchprocessor_spark import api
 
     e = load(spark, SF_ORACLE, "embeddings").limit(60)
@@ -531,10 +533,19 @@ def test_knn_join_routes_agree_and_match_knn_query(spark, monkeypatch):
         F.col("vec_id").alias("qid"), "embedding"
     )
     fast = api.knn_join(queries, e, k=3, exclude_self=True)
+    assert "RoundRobinPartitioning" not in _executed_plan(fast)
+    advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    saved = spark.conf.get(advisory)
+    spark.conf.set(advisory, "1k")
+    try:
+        fanned = api.knn_join(queries, e, k=3, exclude_self=True)
+    finally:
+        spark.conf.set(advisory, saved)
+    assert "RoundRobinPartitioning" in _executed_plan(fanned)
     monkeypatch.setattr(api, "_KNN_JOIN_BYTE_BUDGET", 1)
     slow = api.knn_join(queries, e, k=3, exclude_self=True)
     monkeypatch.undo()
-    assert _rows(fast) == _rows(slow)
+    assert _rows(fast) == _rows(fanned) == _rows(slow)
 
     for q in queries.collect():
         single = api.knn_query(
@@ -547,6 +558,43 @@ def test_knn_join_routes_agree_and_match_knn_query(spark, monkeypatch):
             key=lambda r: r["rank"],
         )
         assert [r["vec_id"] for r in single] == [r["vec_id"] for r in batch]
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_knn_join_broadcast_route_builds_in_two_jobs_without_rerank_join(spark):
+    """The broadcast-matrix route decides its route and collects the
+    query side in at most two Spark jobs at plan-build time (take(1) for
+    the dimension, one capped collect; no count()s), and the candidates
+    carry both raw vectors, so nothing joins above the MapInPandas
+    candidate pass."""
+    from dicebox_sensorybatchprocessor_spark import api
+
+    e = load(spark, SF_ORACLE, "embeddings")
+    queries = (
+        e.withColumn("__k", F.md5(F.col("vec_id").cast("string")))
+        .orderBy("__k", "vec_id")
+        .limit(20)
+        .select(F.col("vec_id").alias("qid"), "embedding")
+    )
+    sc = spark.sparkContext
+    group = "test_knn_join_build_jobs"
+    sc.setJobGroup(group, "knn_join plan build")
+    try:
+        out = api.knn_join(queries, e, k=5, exclude_self=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 1 <= len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    rows = out.collect()
+    assert len(rows) == 20 * 5
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        out._jdf.queryExecution(), "formatted"
+    )
+    tree = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    above, found, _below = tree.partition("MapInPandas")
+    assert found and "Join" not in above
 
 
 def test_knn_join_excludes_self_even_in_narrow_partitions(spark):

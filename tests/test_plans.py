@@ -802,14 +802,14 @@ def test_knn_join_blas_route_plan_shape(spark):
     """sim_knn_join's broadcast-matrix route must never materialize the
     queries x corpus cross product in the plan: no CartesianProduct /
     BroadcastNestedLoopJoin nodes, the candidate relation enters via
-    ArrowEvalPython-free mapInPandas, and both rerank joins stay
-    broadcast (the candidate and query sides are tiny by contract)."""
+    ArrowEvalPython-free mapInPandas, and the rerank joins nothing back
+    (candidates carry their raw vectors), so no shuffle join either."""
     plan = _plan(spark, "sim_knn_join")
     tree = _final_tree(plan)
     assert "CartesianProduct" not in tree
     assert "BroadcastNestedLoopJoin" not in tree
     assert "MapInPandas" in tree  # the BLAS candidate pass, not a crossJoin
-    assert "SortMergeJoin" not in tree  # rerank joins broadcast
+    assert "SortMergeJoin" not in tree  # no rerank join back
 
 
 def test_label_propagation_per_round_shape(spark):
